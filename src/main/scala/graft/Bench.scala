@@ -16,6 +16,18 @@ import org.apache.spark.sql.SparkSession
   * "timing":"min_of_3_rotated+retry"). Failures are recorded per-query in an
   * `errors` map instead of being swallowed. */
 object Bench {
+  /** The `SPARK_GRAFT_EXTRA_CONF` overlay ("k=v,k2=v2") as config pairs:
+    * blank entries are skipped; an entry without a key and `=` fails loudly,
+    * naming the entry. */
+  def extraConf(raw: String): Seq[(String, String)] =
+    raw.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not of the form key=value")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -28,9 +40,8 @@ object Bench {
     // hypothesis testing (same overlay as JobProbe): SPARK_GRAFT_EXTRA_CONF
     // ="k=v,k2=v2" — the driver never sets it, so driver runs measure the
     // committed defaults
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder = builder.config(k, v)
-    })
+    extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
+      .foreach { case (k, v) => builder = builder.config(k, v) }
     val spark = builder
       // The suite compiles ~190 distinct plans per interleaved pass; the
       // default 100-entry codegen cache is fully evicted between a query's two

@@ -32,9 +32,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Failure note: cached blocks are recomputable from lineage (unlike a
   * localCheckpoint), so executor loss degrades to recompute, never failure.
-  * Cached frames with an OWNED per-artifact lifecycle (the query registry's
-  * pipeCache) manage their own persists and bypass this registry — by
-  * OBJECT, not by plan: CacheManager dedupes cache entries by plan, so if
+  * Cached frames with an OWNED per-artifact lifecycle (the session-scoped
+  * Artifacts store) manage their own persists and bypass this registry —
+  * by OBJECT, not by plan: CacheManager dedupes cache entries by plan, so if
   * an owned persist's plan `sameResult`s a registry entry they share one
   * cache entry, and registry eviction can drop it out from under the
   * owner. That failure mode is degrade-to-recompute only (the owner's

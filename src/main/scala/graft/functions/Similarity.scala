@@ -453,7 +453,7 @@ object Similarity {
     * centroid matrix (deterministic k-means, strided sampling), yet every
     * query (re)construction re-paid the O(sampleCap·√k·dim·iters)
     * driver-side k-means (~0.2 s at k≈10⁴) — per bench sample, per serve
-    * path. Model-derivation caching, the ivfModelCache posture: content
+    * path. Model-derivation caching, the trained-model memo posture: content
     * key = (geometry + full content hash), hits verified element-exact so
     * a hash collision can never serve the wrong grouping; bounded FIFO. */
   private val superGroupsCache = new java.util.LinkedHashMap[
@@ -923,9 +923,9 @@ object Similarity {
     requireCleanIndex(fs, dir, "readIndexModels")
     // Open-once serving: every serve construction was re-collecting the
     // centroid and codebook tables as two Spark jobs (~0.3-0.4 s of
-    // driver-side open per request). The models are cached per (session,
-    // dir) behind a freshness validator of (manifest bytes, centroids/
-    // codebooks dir mtimes): ops that CHANGE models rewrite the manifest
+    // driver-side open per request). The models are cached per dir (plain
+    // arrays, the same for every session) behind a freshness validator of
+    // (manifest bytes, centroids/codebooks dir mtimes): ops that CHANGE models rewrite the manifest
     // and swap/extend those dirs (writeIndex, rebuild, split), so they
     // miss; append/compact/delete/merge leave models untouched and hit.
     // The under-lock merge validation reads through readIndexModelsRaw
@@ -939,28 +939,27 @@ object Similarity {
         fs.getFileStatus(p(s"$dir/centroids")).getModificationTime,
         fs.getFileStatus(p(s"$dir/codebooks")).getModificationTime))
       catch { case _: java.io.IOException => None }
-    val key = (System.identityHashCode(spark), dir)
     validator match {
       case None => readIndexModelsRaw(spark, dir)
       case Some(v) =>
         modelOpenCache.synchronized {
-          val hit = modelOpenCache.get(key)
+          val hit = modelOpenCache.get(dir)
           if (hit != null && hit._1 == v) return hit._2
         }
         val models = readIndexModelsRaw(spark, dir)
         modelOpenCache.synchronized {
-          modelOpenCache.put(key, (v, models))
+          modelOpenCache.put(dir, (v, models))
         }
         models
     }
   }
 
   private val modelOpenCache = new java.util.LinkedHashMap[
-      (Int, String),
+      String,
       ((String, Long, Long), (Array[Array[Float]], Array[Array[Array[Float]]]))](
       16, 0.75f, false) {
     override def removeEldestEntry(e: java.util.Map.Entry[
-        (Int, String),
+        String,
         ((String, Long, Long), (Array[Array[Float]], Array[Array[Array[Float]]]))])
         : Boolean = size() > 16
   }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.kql.KqlParser
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** Driver-contract queries whose plans are built by PARSING KQL TEXT — the
   * reference's declared query language ("We plan to use KQL (Kusto Query Language)
@@ -23,12 +23,9 @@ object KqlTextQueries {
 
   /** CSV dump of an events subset for the externaldata row — written once per
     * (session, sfDir); the timed body is the externaldata READ. */
-  private val externCsvCache = scala.collection.concurrent.TrieMap[String, String]()
+  private val ExternCsv = new Artifacts.Kind[String]("extern-csv")
   private def externCsv(s: SparkSession, d: String): String =
-    externCsvCache.getOrElseUpdate(s"${System.identityHashCode(s)}:$d", {
-      val path = s"/tmp/graft_extern/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Artifacts.dir(s, ExternCsv, d) { path =>
       import org.apache.spark.sql.functions._
       Tables.load(s, d, "events")
         .where(col("event_id") % 20 === 0)
@@ -36,8 +33,7 @@ object KqlTextQueries {
           floor(col("value")).cast("long").as("v"))
         .coalesce(1)
         .write.option("header", true).csv(path)
-      path
-    })
+    }
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -8,7 +8,7 @@ import graft.kql.Kql._
 import graft.kql.Scan
 import graft.functions.KqlFunctions._
 import graft.functions.SeriesFunctions
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** One driver-contract query: the Spark plan and (when ANSI-SQL-expressible) the
   * DuckDB oracle. Column names/aliases match between the two by construction; every
@@ -33,7 +33,7 @@ object Queries {
     * stored-variant scenario is write-once / read-many, so the timed query body
     * must be the READ + variant_get path, not parquet-write churn on every
     * invocation (the bench was timing the write: ~37s at sf0.1). */
-  private val variantSegCache = scala.collection.concurrent.TrieMap[String, String]()
+  private val VariantSegment = new Artifacts.Kind[String]("variant-segment")
 
   /** Shared recursive-CTE prefix for the q_scan_funnel* oracles: per-user linear
     * recursion over row numbers replaying Scan.scanSequence's state machine
@@ -816,17 +816,12 @@ object Queries {
     // invocations (the bench) time the stored-variant read path.
     QueryDef("q_variant_stored",
       (s, d) => {
-        val root = variantSegCache.getOrElseUpdate(
-          s"${System.identityHashCode(s)}:$d", {
-            val r = s"/tmp/graft_variant/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-            val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-            fs.delete(new org.apache.hadoop.fs.Path(r), true)
-            val batch = T(s, d, "events").where_(col("user_id") < 50)
-              .project(col("ts").as("_ts"), col("event_id").cast("int").as("_dedup"),
-                col("event_type"), todynamic(col("props")).as("props_v"))
-            Tables.appendSegment(batch, r)
-            r
-          })
+        val root = Artifacts.dir(s, VariantSegment, d) { r =>
+          val batch = T(s, d, "events").where_(col("user_id") < 50)
+            .project(col("ts").as("_ts"), col("event_id").cast("int").as("_dedup"),
+              col("event_type"), todynamic(col("props")).as("props_v"))
+          Tables.appendSegment(batch, r)
+        }
         s.read.parquet(root)
           .extend("k" -> variantGetLong(col("props_v"), "k"))
           .summarize(Seq(col("event_type")),

@@ -34,19 +34,12 @@ object Tables {
     // analyzed plan (schema + file index metadata, the temp-view posture);
     // every action still scans the parquet files. Source dirs are
     // read-only fixture tables by contract (mutated scratch dirs go
-    // through spark.read directly). Entries of stopped sessions are
-    // dropped on access, the session-cache convention.
-    loadCache.filterInPlace { case (_, (owner, _)) =>
-      try !owner.sparkContext.isStopped catch { case _: Throwable => false }
-    }
-    loadCache.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, name),
-      (spark, buildLoad(spark, sfDir, name)))._2
+    // through spark.read directly).
+    Artifacts.get(spark, TablePlan, s"$sfDir/$name.parquet")(
+      buildLoad(spark, sfDir, name))
   }
 
-  private val loadCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(Int, String, String), (SparkSession, DataFrame)]
+  private val TablePlan = new Artifacts.Kind[DataFrame]("table")
 
   private def buildLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -146,6 +146,8 @@ object StreamingIngest {
       .option("path", path).option("checkpointLocation", checkpoint)
       .partitionBy("ts_bucket")
 
+  private val StreamSource = new graft.sources.Artifacts.Kind[String]("stream-source")
+
   /** Open a fixture table as a BOUNDED STREAM (schema from a batch footer read; the
     * ns-timestamp normalization of Tables.load applied). With
     * `Trigger.AvailableNow()` this replays the table through the full micro-batch
@@ -156,14 +158,14 @@ object StreamingIngest {
     val path = s"$sfDir/$name.parquet"
     // FileStreamSource streams a DIRECTORY; the fixture is one parquet file
     // (production tables are directories) — bridge via a symlinked dir.
-    val dir = java.nio.file.Paths.get("/tmp/graft_stream",
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_"), name)
-    java.nio.file.Files.createDirectories(dir)
-    val link = dir.resolve(s"$name.parquet")
-    if (!java.nio.file.Files.exists(link))
-      java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(path))
+    val dir = graft.sources.Artifacts.dir(spark, StreamSource, path) { d =>
+      val local = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(d).toUri)
+      java.nio.file.Files.createDirectories(local)
+      java.nio.file.Files.createSymbolicLink(local.resolve(s"$name.parquet"),
+        java.nio.file.Paths.get(path).toAbsolutePath)
+    }
     val schema = spark.read.parquet(path).schema
-    val df = spark.readStream.schema(schema).parquet(dir.toString)
+    val df = spark.readStream.schema(schema).parquet(dir)
     if (df.columns.contains("ts") &&
         df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -201,7 +203,7 @@ object StreamingIngest {
     * state store, complete-mode memory sink — inside the batch driver contract, so
     * streaming results are oracle-checked like any other query. Memoized per
     * (session, sink name): the stream runs once per session. */
-  private val streamCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
+  private val StreamResult = graft.sources.Artifacts.frames("stream-result")
 
   def runBoundedAggregation(spark: org.apache.spark.sql.SparkSession, sinkName: String,
                             agg: DataFrame): DataFrame =
@@ -214,27 +216,13 @@ object StreamingIngest {
     runBounded(spark, sinkName, deduped, "append")
 
   private def runBounded(spark: org.apache.spark.sql.SparkSession, sinkName: String,
-                         stream: DataFrame, mode: String): DataFrame = {
-    evictStale(spark)
-    streamCache.getOrElseUpdate(s"${System.identityHashCode(spark)}:$sinkName", {
+                         stream: DataFrame, mode: String): DataFrame =
+    graft.sources.Artifacts.get(spark, StreamResult, sinkName) {
       val q = stream.writeStream.format("memory").queryName(sinkName)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       spark.table(sinkName).persist()
-    })
-  }
-
-  /** Cache hygiene: entries are keyed by session identity; when a NEW session
-    * first runs a stream, every other session's entries are unpersisted and
-    * dropped — persisted results never outlive their session's useful life, and
-    * the cache stays bounded across long-lived multi-session processes. */
-  private def evictStale(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix = s"${System.identityHashCode(spark)}:"
-    streamCache.keys.filterNot(_.startsWith(prefix)).foreach { k =>
-      streamCache.remove(k).foreach(df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () })
     }
-  }
 }

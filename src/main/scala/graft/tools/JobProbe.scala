@@ -21,9 +21,8 @@ object JobProbe {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
     // hypothesis testing: SPARK_GRAFT_EXTRA_CONF="k=v,k2=v2" overlays confs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b = b.config(k, v)
-    })
+    graft.Bench.extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
+      .foreach { case (k, v) => b = b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Warmup.run(spark)

@@ -125,17 +125,56 @@ class DedupSpec extends SparkSpec {
     assert(byId(3L)._2 == 8L && byId(3L)._3 == 12L, s"doc 3 partial overlap: $byId")
   }
 
-  test("pipeline caches do not outlive their session (two-session hygiene)") {
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** A private copy of the documents table: sessions of one context share
+    * plan-keyed cache entries, so frames over the fixture path could already
+    * be persisted by another suite. */
+  private def documentsCopy(): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_dedup_docs")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      d.resolve("documents.parquet"))
+    d.toString
+  }
+
+  test("a live session's MinHash artifacts survive another session's run") {
     val fn = SparkEntry.queries("q_minhash_pairs")
-    assert(fn(spark, sf).count() >= 0)
-    val withS1 = spark.sparkContext.getPersistentRDDs.size
-    assert(withS1 > 0, "expected the minhash pipeline to persist intermediates")
-    // a second session triggers eviction of the first session's entries on its
-    // first cache access — persisted RDD count must not accumulate per session
-    val s2 = spark.newSession()
-    assert(fn(s2, sf).count() >= 0)
-    val withS2 = spark.sparkContext.getPersistentRDDs.size
-    assert(withS2 <= withS1, s"persisted RDDs accumulated: $withS1 -> $withS2")
+    val d = documentsCopy()
+    val before = persistedIds
+    assert(fn(spark.newSession(), d).count() >= 0)
+    val ofA = persistedIds -- before
+    assert(ofA.nonEmpty, "expected the minhash pipeline to persist intermediates")
+    assert(fn(spark.newSession(), d).count() >= 0)
+    assert(ofA.subsetOf(persistedIds),
+      s"another session unpersisted a live session's frames: ${ofA -- persistedIds}")
+  }
+
+  test("releasing a session unpersists its frames and deletes its dirs; next call rebuilds") {
+    import graft.sources.Artifacts
+    val fn = SparkEntry.queries("q_minhash_pairs")
+    val kind = new Artifacts.Kind[String]("spec-dir")
+    def exists(p: String) = {
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    }
+    val s = spark.newSession()
+    val d = documentsCopy()
+    def build(): (Set[Int], String) = {
+      val before = persistedIds
+      val n = fn(s, d).count()
+      val dir = Artifacts.dir(s, kind, d)(p => s.range(n).write.parquet(p))
+      (persistedIds -- before, dir)
+    }
+    val (frames, dir) = build()
+    assert(frames.nonEmpty && exists(dir))
+    assert(build() == ((Set.empty[Int], dir)), "a second call must be served, not rebuilt")
+    Artifacts.release(s)
+    assert((frames & persistedIds).isEmpty, "release left frames persisted")
+    assert(!exists(dir), s"release left $dir")
+    val (rebuilt, dir2) = build()
+    assert(rebuilt.nonEmpty && exists(dir2) && dir2 != dir)
+    Artifacts.release(s)
   }
 
   test("DSIR weights separate a planted target vocabulary and stay integer-exact") {
