@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every driver-contract query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line on stdout (also written to
   * BENCH_LOCAL.json so consumers need not scrape build-tool-prefixed stdout).
@@ -31,24 +30,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
     // hypothesis testing (same overlay as JobProbe): SPARK_GRAFT_EXTRA_CONF
     // ="k=v,k2=v2" — the driver never sets it, so driver runs measure the
     // committed defaults
-    extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
-      .foreach { case (k, v) => builder = builder.config(k, v) }
-    val spark = builder
-      // The suite compiles ~190 distinct plans per interleaved pass; the
-      // default 100-entry codegen cache is fully evicted between a query's two
-      // samples, so every sample re-pays Janino compilation (~1s on a 25-row
-      // broadcast join). A real long-lived driver serving this many distinct
-      // queries would be sized the same way.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
+    val spark = extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
+      .foldLeft(SparkEntry.builder(cpus)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Warmup.run(spark)

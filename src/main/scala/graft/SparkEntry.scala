@@ -35,6 +35,27 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
+  /** The engine settings of every session this library runs under:
+    * shuffle partitions = cores, UTC, the graft native expressions
+    * (GraftExtensions: the function layer calls `graft_*` functions directly,
+    * so a session without them fails at analysis) and no UI. The codegen
+    * cache holds 2000 classes: the default 100 entries were fully evicted
+    * between a query's two bench samples, so every sample re-paid Janino
+    * compilation (~1s on a 25-row broadcast join). */
+  def engineConf(cpus: String): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "2000")
+
+  /** The one session factory: `local[cpus]` with [[engineConf]]. Callers add
+    * only what is theirs (an app name, warehouse dirs, a config overlay). */
+  def builder(cpus: String): SparkSession.Builder =
+    engineConf(cpus).foldLeft(SparkSession.builder().master(s"local[$cpus]")) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+
   /** DuckDB-runnable ANSI SQL for each oracle-checkable query (same parquet tables,
     * same column names, total ORDER BY). Sketch/heuristic operators are omitted →
     * rows-only check. */

@@ -166,27 +166,12 @@ object Dedup {
     * No pairwise candidate blowup at any corpus size, no driver state. */
 
   /** The k-token span table of a token array: array<struct<pos:int,h:bigint>>
-    * with h = portableHash60 of the space-joined window. Native kernel when
-    * registered (one streaming-md5 pass per doc — the HOF form is
-    * CodegenFallback and re-interprets the md5 Column tree per window;
-    * bit-identical either way, NativeExprSpec). Select-only, so it composes
-    * with a streaming DataFrame unchanged. Fewer than k tokens (or k < 1) →
-    * empty; null token array → null (both paths — the native kernel is a
-    * null-propagating BinaryExpression, and the column form mirrors it). */
-  def spanHashes(toks: Column, k: Int): Column = {
-    val emptySpans = array().cast("array<struct<pos:int,h:bigint>>")
-    if (KqlFunctions.nativeFn("graft_span_hashes"))
-      call_function("graft_span_hashes", toks, lit(k))
-    else if (k < 1) when(toks.isNotNull, emptySpans)
-    else {
-      val n = size(toks)
-      when(n >= k,
-        transform(sequence(lit(0), n - k),
-          i => struct(i.as("pos"),
-            portableHash60(array_join(slice(toks, i + 1, lit(k)), " ")).as("h"))))
-        .when(toks.isNotNull, emptySpans)
-    }
-  }
+    * with h = portableHash60 of the space-joined window, from one
+    * streaming-md5 pass per doc (the graft_span_hashes kernel). Select-only,
+    * so it composes with a streaming DataFrame unchanged. Fewer than k
+    * tokens (or k < 1) → empty; null token array → null. */
+  def spanHashes(toks: Column, k: Int): Column =
+    call_function("graft_span_hashes", toks, lit(k))
 
   def substringSpanStats(df: DataFrame, textCol: String, idCol: String,
       k: Int): DataFrame = {
@@ -209,28 +194,16 @@ object Dedup {
     val joined = toks.join(keptPerDoc, Seq("id"), "left")
       .select(col("id"), col("n"),
         coalesce(col("__kept"), array().cast("array<int>")).as("__kept"))
-    if (KqlFunctions.nativeFn("graft_span_dup_stats"))
-      // per-doc tail in one coverage-array pass (vs three HOFs per doc);
-      // n < k (or null text) → no spans → (0, 0), the column form's guard
-      joined
-        .select(col("id"), col("n").cast("long").as("n_tokens"),
-          when(col("n") >= k,
-            call_function("graft_span_dup_stats", col("n"), lit(k), col("__kept")))
-            .as("__st"))
-        .select(col("id"), col("n_tokens"),
-          coalesce(col("__st.dup"), lit(0L)).as("dup_spans"),
-          coalesce(col("__st.rem"), lit(0L)).as("removed_tokens"))
-    else joined
+    // per-doc tail in one coverage-array pass; n < k (or null text) → no
+    // spans → (0, 0)
+    joined
       .select(col("id"), col("n").cast("long").as("n_tokens"),
-        // dup positions = the doc's span positions minus its keepers
         when(col("n") >= k,
-          filter(sequence(lit(0), col("n") - k),
-            p => !array_contains(col("__kept"), p)))
-          .otherwise(array().cast("array<int>")).as("__dup"))
+          call_function("graft_span_dup_stats", col("n"), lit(k), col("__kept")))
+          .as("__st"))
       .select(col("id"), col("n_tokens"),
-        size(col("__dup")).cast("long").as("dup_spans"),
-        size(array_distinct(flatten(transform(col("__dup"),
-          p => sequence(p, p + (k - 1)))))).cast("long").as("removed_tokens"))
+        coalesce(col("__st.dup"), lit(0L)).as("dup_spans"),
+        coalesce(col("__st.rem"), lit(0L)).as("removed_tokens"))
   }
 
   // ------------------------------------------------------------------
@@ -238,33 +211,14 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** 64-bit SimHash over a PRE-MATERIALIZED per-token hash array (majority vote per
-    * bit). Folding a 64-counter array through the token stream (round 1) allocated a
-    * fresh 64-int array per token per row — an allocation storm that dominated the
-    * bench and GC-taxed every query after it. Per-bit scalar folds over the hash
-    * array do the same adds with zero intermediate arrays.
+    * bit; null elements cast no vote and the majority denominator counts non-null
+    * elements only) — the native SimHash64 kernel, one pass with no intermediate
+    * arrays.
     *
     * Perf contract (as TextAnalysis.shinglesOf): `hashes` must be a materialized
     * attribute, not a nested transform(...) expression. */
   def simHashFromHashes(hashes: Column): Column =
-    if (nativeExprs) call_function(graft.plans.NativeExpressions.simhashName, hashes)
-    else {
-      // null parity with the native SimHash64 expression: null elements cast no
-      // vote and the majority denominator counts non-null elements only
-      val n = size(filter(hashes, h => h.isNotNull))
-      val bitCounts = transform(sequence(lit(0), lit(63)),
-        i => aggregate(hashes, lit(0L),
-          (acc, h) => acc + coalesce(
-            call_function("shiftrightunsigned", h, i).bitwiseAND(lit(1L)), lit(0L))))
-      aggregate(zip_with(bitCounts, sequence(lit(0), lit(63)),
-        (c, i) => when(c * 2 > n, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-        lit(0L), (acc, v) => acc.bitwiseOR(v))
-    }
-
-  /** True when the graft native expressions are registered in the active session. */
-  private def nativeExprs: Boolean =
-    try org.apache.spark.sql.SparkSession.active.catalog
-      .functionExists(graft.plans.NativeExpressions.simhashName)
-    catch { case _: Throwable => false }
+    call_function(graft.plans.NativeExpressions.simhashName, hashes)
 
   /** 64-bit SimHash of a token multiset (convenience wrapper; pipelines should
     * materialize the hash array first and call simHashFromHashes). Token hashes are

@@ -126,20 +126,17 @@ object KqlFunctions {
   /** `(maskedValue << 6) | prefixBits` via the native one-pass kernel —
     * callers needing both the address and its suffix read them out of ONE
     * parse (shiftright / bitwiseAND) instead of re-expanding the split
-    * tree per use site. Callers must gate on [[ipv4Native]]. */
+    * tree per use site. */
   private[graft] def ipv4Pack(c: Column): Column =
     call_function("graft_ipv4_pack", c.cast("string"))
-  private[graft] def ipv4Native: Boolean = nativeFn("graft_ipv4_pack")
 
   /** KQL `parse_ipv4`: dotted-quad string → long, with an optional `/prefix`
     * suffix whose mask is applied (Kusto semantics); malformed input → null.
-    * Native one-scan kernel when registered (ParseIpv4K — the column chain
-    * below re-expands at every use site; q_kql_scalar_misc11's projection
-    * carried a 131 KB tree of repeated splits), column fallback otherwise;
-    * parity asserted in NativeExprSpec. */
-  def parseIpv4(c: Column): Column =
-    if (ipv4Native) shiftright(ipv4Pack(c), 6) else parseIpv4Hof(c)
+    * One-scan native kernel (ParseIpv4K). */
+  def parseIpv4(c: Column): Column = shiftright(ipv4Pack(c), 6)
 
+  /** The split-chain column formulation of [[parseIpv4]] — the NativeExprSpec
+    * parity reference. */
   private[graft] def parseIpv4Hof(c: Column): Column = {
     val halves = split(c, "/")
     val bits = when(size(halves) > 1, element_at(halves, 2).cast("int"))
@@ -175,18 +172,10 @@ object KqlFunctions {
   /** KQL `ipv4_is_in_range(ip, range)`: the ip with the range's prefix mask
     * applied equals the range's base address. */
   def ipv4IsInRange(ip: Column, range: Column): Column = {
-    if (ipv4Native) {
-      val pr = ipv4Pack(range)
-      val bits = pr.bitwiseAND(lit(63L)).cast("int")
-      val base = shiftright(pr, 6)
-      val v = parseIpv4(ip)
-      return when(v.isNotNull && base.isNotNull, ipMask(v, bits) === base)
-    }
-    val halves = split(range, "/")
-    val bits = when(size(halves) > 1, element_at(halves, 2).cast("int"))
-      .otherwise(lit(32))
-    val base = parseIpv4Hof(range)
-    val v = parseIpv4Hof(ip)
+    val pr = ipv4Pack(range)
+    val bits = pr.bitwiseAND(lit(63L)).cast("int")
+    val base = shiftright(pr, 6)
+    val v = parseIpv4(ip)
     when(v.isNotNull && base.isNotNull, ipMask(v, bits) === base)
   }
 
@@ -214,10 +203,9 @@ object KqlFunctions {
       lit(null).cast("boolean")).otherwise(wholeEq && partEq)
   }
 
-  /** geo_geohash_to_central_point COLUMN fallback (per-bit aggregate folds
-    * over the base-32 token — the native GeohashCenterExpr kernel is the
-    * fast path; KqlParser.geoHashDecode dispatches). Kept reachable here so
-    * the NativeExprSpec parity test can drive the fallback directly. */
+  /** geo_geohash_to_central_point as a COLUMN formulation (per-bit aggregate
+    * folds over the base-32 token) — the NativeExprSpec parity reference for
+    * the GeohashCenterExpr kernel KqlParser.geoHashDecode calls. */
   private[graft] def geohashCenterHof(gh: Column): Column = {
     val alphabet = "0123456789bcdefghjkmnpqrstuvwxyz"
     val cmap = map(alphabet.zipWithIndex.flatMap {
@@ -246,33 +234,17 @@ object KqlFunctions {
     }), 1)
   }
 
-  /** True when the named graft native expression is registered in the
-    * active session (spark.sql.extensions=graft.plans.GraftExtensions) —
-    * the single native-or-fallback dispatch check used across the library. */
-  private[graft] def nativeFn(name: String): Boolean =
-    try org.apache.spark.sql.SparkSession.active.catalog.functionExists(name)
-    catch { case _: Throwable => false }
-
-  private def nativeExprs: Boolean =
-    nativeFn(graft.plans.GeoKernelExpressions.pipName)
-
   /** `geo_point_in_polygon` kernel — even-odd ray cast over the closed
     * vertex ring. The comparison order is FIXED (identical IEEE chain to
     * the DuckDB oracle replays and the native covering's residual test) so
     * containment can never flip across engines. Horizontal edges make the
     * guard false before the ±Inf division is used. Deviation (documented):
     * takes a bare vertex ring, not Kusto's GeoJSON bag. Native codegen'd
-    * loop when GraftExtensions is installed; bit-identical HOF fallback
-    * otherwise (the Similarity.dot pattern — see GeoKernelExpressions). */
-  def pointInPolygon(x0: Column, y0: Column, ring: Column): Column = {
-    // empty ring → null on BOTH paths (the HOF's sequence(0, -1) would
-    // otherwise crash; native would answer false) — the geo posture
-    val core =
-      if (nativeExprs) call_function(graft.plans.GeoKernelExpressions.pipName,
-        x0.cast("double"), y0.cast("double"), ring.cast("array<array<double>>"))
-      else pointInPolygonHof(x0, y0, ring)
-    when(size(ring) > 0, core)
-  }
+    * loop (GeoKernelExpressions); [[pointInPolygonHof]] is its parity
+    * reference. An empty ring → null (the geo posture). */
+  def pointInPolygon(x0: Column, y0: Column, ring: Column): Column =
+    when(size(ring) > 0, call_function(graft.plans.GeoKernelExpressions.pipName,
+      x0.cast("double"), y0.cast("double"), ring.cast("array<array<double>>")))
 
   private[graft] def pointInPolygonHof(x0: Column, y0: Column, ring: Column): Column = {
     val x = x0.cast("double"); val y = y0.cast("double")
@@ -293,17 +265,11 @@ object KqlFunctions {
   /** `geo_distance_point_to_line` kernel — min over segments of the
     * point-to-segment distance in a local equirectangular projection,
     * scaled to meters on the mean-radius sphere (same deviation posture as
-    * geo_distance_2points: spherical, not WGS84 geodesic). Native loop /
-    * HOF fallback, like pointInPolygon. */
-  def pointToLineMeters(lngC: Column, latC: Column, line: Column): Column = {
-    // <2-vertex line → null on BOTH paths (HOF's descending sequence would
-    // crash; native would answer +Infinity·scale)
-    val core =
-      if (nativeExprs) call_function(graft.plans.GeoKernelExpressions.plineName,
-        lngC.cast("double"), latC.cast("double"), line.cast("array<array<double>>"))
-      else pointToLineMetersHof(lngC, latC, line)
-    when(size(line) >= 2, core)
-  }
+    * geo_distance_2points: spherical, not WGS84 geodesic). Native loop,
+    * like pointInPolygon. A line of fewer than 2 vertices → null. */
+  def pointToLineMeters(lngC: Column, latC: Column, line: Column): Column =
+    when(size(line) >= 2, call_function(graft.plans.GeoKernelExpressions.plineName,
+      lngC.cast("double"), latC.cast("double"), line.cast("array<array<double>>")))
 
   private[graft] def pointToLineMetersHof(lngC: Column, latC: Column, line: Column): Column = {
     val px = lngC.cast("double"); val py = latC.cast("double")
@@ -387,31 +353,18 @@ object KqlFunctions {
     stepped.getField("out")
   }
 
-  /** The `/prefix` suffix of an ipv4 string, 32 when absent. */
-  private def ipv4Suffix(c: Column): Column = {
-    val halves = split(c, "/")
-    when(size(halves) > 1, element_at(halves, 2).cast("int")).otherwise(lit(32))
-  }
-
   /** KQL `ipv4_compare(a, b [, prefix])` → −1/0/1 under the EFFECTIVE prefix:
     * the smallest of both operands' `/suffix`es and the optional argument
     * (Kusto's combination rule). parseIpv4 already applies each operand's own
-    * suffix; re-masking with the (≤) effective prefix composes exactly. On
-    * the native path each operand is ONE kernel call whose packed long
-    * carries both the masked value and the suffix. */
+    * suffix; re-masking with the (≤) effective prefix composes exactly. Each
+    * operand is ONE kernel call whose packed long carries both the masked
+    * value and the suffix. */
   def ipv4Compare(a: Column, b: Column, extra: Column): Column = {
-    if (ipv4Native) {
-      val pa = ipv4Pack(a); val pb = ipv4Pack(b)
-      val eff = least(pa.bitwiseAND(lit(63L)).cast("int"),
-        pb.bitwiseAND(lit(63L)).cast("int"), extra.cast("int"))
-      val va = ipMask(shiftright(pa, 6), eff)
-      val vb = ipMask(shiftright(pb, 6), eff)
-      return when(va.isNotNull && vb.isNotNull,
-        when(va < vb, -1L).when(va > vb, 1L).otherwise(0L))
-    }
-    val eff = least(ipv4Suffix(a), ipv4Suffix(b), extra.cast("int"))
-    val va = ipMask(parseIpv4Hof(a), eff)
-    val vb = ipMask(parseIpv4Hof(b), eff)
+    val pa = ipv4Pack(a); val pb = ipv4Pack(b)
+    val eff = least(pa.bitwiseAND(lit(63L)).cast("int"),
+      pb.bitwiseAND(lit(63L)).cast("int"), extra.cast("int"))
+    val va = ipMask(shiftright(pa, 6), eff)
+    val vb = ipMask(shiftright(pb, 6), eff)
     when(va.isNotNull && vb.isNotNull,
       when(va < vb, -1L).when(va > vb, 1L).otherwise(0L))
   }
@@ -427,16 +380,12 @@ object KqlFunctions {
     * no embedded dotted-quad (IPv4-mapped) tail, no zone index; malformed
     * input → null (Kusto's try-semantics). The canonical form makes
     * lexicographic comparison equal numeric comparison, which ipv6_compare /
-    * ipv6_is_match exploit. */
-  def parseIpv6(c: Column): Column = {
-    // native one-pass kernel when available (ParseIpv6 — the column chain
-    // below is HOF-based CodegenFallback and was the hot spot of every
-    // ipv6 bench query); exact parity asserted in NativeExprSpec
-    val native = nativeFn("graft_parse_ipv6")
-    if (native) return call_function("graft_parse_ipv6", c.cast("string"))
-    parseIpv6Hof(c)
-  }
+    * ipv6_is_match exploit. One-pass native kernel (ParseIpv6). */
+  def parseIpv6(c: Column): Column =
+    call_function("graft_parse_ipv6", c.cast("string"))
 
+  /** The HOF column formulation of [[parseIpv6]] — the NativeExprSpec parity
+    * reference. */
   private[graft] def parseIpv6Hof(c: Column): Column = {
     val t = lower(trim(c.cast("string")))
     val parts = split(t, "::", -1)

@@ -16,23 +16,12 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** True when the graft native expressions are registered in the active session
-    * (spark.sql.extensions=graft.plans.GraftExtensions). */
-  private def nativeExprs: Boolean =
-    nativeFnExists(graft.plans.NativeExpressions.dotName)
-
   /** Elementwise dot product of two float-array columns, accumulated left-to-right
-    * in double — identical semantics on both paths: the native codegen'd DotF32
-    * expression when the session has GraftExtensions installed (primitive loop
-    * inside WholeStageCodegen), else the higher-order-function fold (interpreted,
-    * CodegenFallback). */
+    * in double: the native codegen'd DotF32 expression (primitive loop inside
+    * WholeStageCodegen; a null element contributes 0, the shorter array bounds
+    * the loop). */
   def dot(a: Column, b: Column): Column =
-    if (nativeExprs) call_function(graft.plans.NativeExpressions.dotName, a, b)
-    // null parity with the native DotF32 expression: a null element (or the null
-    // padding zip_with adds past the shorter array's end) contributes 0 to the
-    // fold, matching native's skip-null / truncate-to-shorter semantics
-    else aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + coalesce(v, lit(0.0)))
+    call_function(graft.plans.NativeExpressions.dotName, a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -55,28 +44,12 @@ object Similarity {
       .select(col(queryId), col(corpusId), col("rank"), col("cosine"))
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim d) in [-1,1]
-    * (single source of truth shared with the native expression). */
-  private def planeComponent(p: Int, d: Int, seed: Long): Double =
-    graft.plans.NativeExpressions.planeComponent(p, d, seed)
-
-  /** All `nProj` hyperplane projections of a vector in ONE traversal: zip each vector
-    * element with its per-plane weight row and elementwise-sum the contribution
-    * arrays. The weight matrix ships as a SINGLE typedlit literal node — building it
-    * from dim×nProj nested array() constructors (round-1 shape) put 5000+ nodes into
-    * the expression tree and the optimizer spent a minute per plan walking them. */
+  /** All `nProj` hyperplane projections of a vector in ONE traversal (the native
+    * HyperplaneProjections kernel; weights are the deterministic
+    * NativeExpressions.planeComponent hash of (seed, plane, dim)). */
   def lshProjections(vec: Column, dim: Int, nProj: Int, seed: Long = 42L): Column =
-    if (nativeExprs)
-      call_function(graft.plans.NativeExpressions.hyperplanesName,
-        vec, lit(dim), lit(nProj), lit(seed))
-    else {
-      val dimWeights = typedlit((0 until dim).map(d =>
-        (0 until nProj).map(p => planeComponent(p, d, seed))))
-      aggregate(
-        zip_with(vec, dimWeights, (x, w) => transform(w, wp => x.cast("double") * wp)),
-        array_repeat(lit(0.0), nProj),
-        (acc, contrib) => zip_with(acc, contrib, (a, c) => a + c))
-    }
+    call_function(graft.plans.NativeExpressions.hyperplanesName,
+      vec, lit(dim), lit(nProj), lit(seed))
 
   /** Multi-table sign-LSH keys: `numTables` independent tables of `bitsPerTable` sign
     * bits each, packed as `(table << bitsPerTable) | bits` — an array of `numTables`
@@ -168,25 +141,18 @@ object Similarity {
   def ivfAssign(vec: Column, centroids: Array[Array[Float]]): Column =
     element_at(ivfProbes(vec, centroids, 1), 1)
 
-  private def nativeFnExists(name: String): Boolean =
-    try org.apache.spark.sql.SparkSession.active.catalog.functionExists(name)
-    catch { case _: Throwable => false }
-
-  /** The nProbe nearest centroid ids for a query vector (array column).
-    * Native path: graft_ivf_probes carries the centroid MATRIX as ONE
-    * literal array and scores it in a fused loop — plan size is
-    * k-independent, which is what lets the cluster count follow the corpus
-    * (k ∝ n, the SemDeDup posture) without the literal-expression form's
-    * k separate dot subtrees becoming the bottleneck. Fallback kept;
-    * identical score chain, tie-break, and null posture (a null vector is
-    * null on BOTH paths — parity in NativeExprSpec). */
+  /** The nProbe nearest centroid ids for a query vector (array column):
+    * graft_ivf_probes carries the centroid MATRIX as ONE literal array and
+    * scores it in a fused loop — plan size is k-independent, which is what
+    * lets the cluster count follow the corpus (k ∝ n, the SemDeDup posture).
+    * A null vector yields null. */
   def ivfProbes(vec: Column, centroids: Array[Array[Float]], nProbe: Int): Column =
-    if (nativeFnExists("graft_ivf_probes"))
-      call_function("graft_ivf_probes", vec,
-        typedlit(centroids.map(_.toSeq).toSeq), lit(nProbe))
-    else ivfProbesHof(vec, centroids, nProbe)
+    call_function("graft_ivf_probes", vec,
+      typedlit(centroids.map(_.toSeq).toSeq), lit(nProbe))
 
-  /** The fallback chain alone — reachable for the NativeExprSpec parity test. */
+  /** The literal-expression reference chain (k dot subtrees; same score
+    * chain, tie-break and null posture as graft_ivf_probes) — the
+    * NativeExprSpec parity reference. */
   private[graft] def ivfProbesHof(vec: Column,
       centroids: Array[Array[Float]], nProbe: Int): Column = {
     val scored = array(centroids.zipWithIndex.toIndexedSeq.map { case (c, i) =>
@@ -264,14 +230,18 @@ object Similarity {
   def assignProbes(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Float]], nProbe: Int): DataFrame =
     if (centroids.length >= centroidTableThreshold) {
-      // well-formed driver matrix (every row non-null, uniform dim) →
-      // the exact bound-PRUNED kernel: √k super dots + surviving members
-      // per row instead of k dots + a k-row typed-aggregate reduce per row
-      // (set-parity proven in SimilaritySpec). Ragged/null-row models keep
-      // the broadcast-table plan, as does a genuinely tabular model source
-      // (assignProbesTable called directly).
+      // well-formed driver matrix (every row non-null, uniform dim, every
+      // value finite) → the exact bound-PRUNED kernel: √k super dots +
+      // surviving members per row instead of k dots + a k-row
+      // typed-aggregate reduce per row (set-parity proven in
+      // SimilaritySpec). Ragged/null-row models keep the broadcast-table
+      // plan, as does a genuinely tabular model source (assignProbesTable
+      // called directly). So do non-finite models: a NaN centroid scores
+      // NaN, which ranks first, but its group's bounds ignore it (NaN
+      // compares false), so the pruned kernel could skip it.
       val uniform = centroids(0) != null &&
-        centroids.forall(c => c != null && c.length == centroids(0).length)
+        centroids.forall(c => c != null && c.length == centroids(0).length &&
+          c.forall(x => java.lang.Float.isFinite(x)))
       if (uniform) assignProbesPruned(df, idCol, vecCol, centroids, nProbe)
       else assignProbesTable(df, idCol, vecCol, centroidTable(df, centroids), nProbe)
     }
@@ -292,8 +262,7 @@ object Similarity {
   private[graft] def assignProbesPruned(df: DataFrame, idCol: String,
       vecCol: String, centroids: Array[Array[Float]], nProbe: Int): DataFrame = {
     require(nProbe >= 1, "assignProbesPruned: nProbe must be >= 1")
-    val (supers, gid) = superGroups(centroids)
-    val model = graft.plans.IvfPruned.build(centroids, supers, gid)
+    val model = prunedModel(centroids)
     val rows = df.where(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol).as("__av"))
     import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -455,34 +424,52 @@ object Similarity {
     * driver-side k-means (~0.2 s at k≈10⁴) — per bench sample, per serve
     * path. Model-derivation caching, the trained-model memo posture: content
     * key = (geometry + full content hash), hits verified element-exact so
-    * a hash collision can never serve the wrong grouping; bounded FIFO. */
+    * a hash collision can never serve the wrong grouping; bounded FIFO.
+    * The entry also holds the pruned-kernel model built from the grouping,
+    * so equal matrices share one model reference and their plans
+    * canonicalize equal (IvfPrunedModel's array fields compare by
+    * reference). */
+  private final class GroupEntry(val cents: Array[Array[Float]],
+      val groups: (Array[Array[Float]], Array[Int])) {
+    lazy val model: graft.plans.IvfPrunedModel =
+      graft.plans.IvfPruned.build(cents, groups._1, groups._2)
+  }
   private val superGroupsCache = new java.util.LinkedHashMap[
-      (Int, Int, Int, Int, Int),
-      (Array[Array[Float]], (Array[Array[Float]], Array[Int]))](16, 0.75f, false) {
+      (Int, Int, Int, Int, Int), GroupEntry](16, 0.75f, false) {
     override def removeEldestEntry(e: java.util.Map.Entry[
-        (Int, Int, Int, Int, Int),
-        (Array[Array[Float]], (Array[Array[Float]], Array[Int]))]): Boolean =
+        (Int, Int, Int, Int, Int), GroupEntry]): Boolean =
       size() > 8
   }
 
-  private[graft] def superGroups(centroids: Array[Array[Float]],
-      kmIters: Int = 5, sampleCap: Int = 4096)
-      : (Array[Array[Float]], Array[Int]) = {
+  private def groupEntry(centroids: Array[Array[Float]], kmIters: Int,
+      sampleCap: Int): GroupEntry = {
     val key = (centroids.length, if (centroids.isEmpty) 0 else centroids.head.length,
       java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]]),
       kmIters, sampleCap)
     superGroupsCache.synchronized {
       val hit = superGroupsCache.get(key)
-      if (hit != null && hit._1.length == centroids.length &&
-          hit._1.indices.forall(i => java.util.Arrays.equals(hit._1(i), centroids(i))))
-        return hit._2
+      if (hit != null && hit.cents.length == centroids.length &&
+          hit.cents.indices.forall(i => java.util.Arrays.equals(hit.cents(i), centroids(i))))
+        return hit
     }
-    val computed = superGroupsUncached(centroids, kmIters, sampleCap)
+    val entry = new GroupEntry(centroids,
+      superGroupsUncached(centroids, kmIters, sampleCap))
     superGroupsCache.synchronized {
-      superGroupsCache.put(key, (centroids, computed))
+      superGroupsCache.put(key, entry)
     }
-    computed
+    entry
   }
+
+  private[graft] def superGroups(centroids: Array[Array[Float]],
+      kmIters: Int = 5, sampleCap: Int = 4096)
+      : (Array[Array[Float]], Array[Int]) =
+    groupEntry(centroids, kmIters, sampleCap).groups
+
+  /** The [[graft.plans.IvfPrunedModel]] of a centroid matrix over its
+    * [[superGroups]], one reference per equal matrix. */
+  private[graft] def prunedModel(centroids: Array[Array[Float]],
+      kmIters: Int = 5, sampleCap: Int = 4096): graft.plans.IvfPrunedModel =
+    groupEntry(centroids, kmIters, sampleCap).model
 
   private def superGroupsUncached(centroids: Array[Array[Float]],
       kmIters: Int, sampleCap: Int)
@@ -550,7 +537,7 @@ object Similarity {
     // recall-approximate contract the hier path already carries;
     // groupProbe = √k still degenerates to EXACT flat assignment (scoring
     // covers every group regardless of how groups were trained).
-    val (probeSupers, gid) = superGroups(centroids, kmIters, sampleCap)
+    val model = prunedModel(centroids, kmIters, sampleCap)
     // FUSED ladder kernel (IvfPruned.evalHier): candidate set, score chain,
     // and both tie-breaks replicate the explode → broadcast-member-join →
     // TopKAgg ladder row-for-row (supers scored with the ivfProbes chain,
@@ -560,14 +547,13 @@ object Similarity {
     // typed aggregate, now one projection (guide §4: no typed reduce in the
     // hot path). Degeneracy (groupProbe = #groups ⇒ exact flat) and sampled
     // training contracts are asserted in SimilaritySpec.
-    val model = graft.plans.IvfPruned.build(centroids, probeSupers, gid)
     val rows = df.where(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol).as("__av"))
     import org.apache.spark.sql.graftbridge.ColumnBridge
     spreadWide(rows).select(col(idCol),
       explode(ColumnBridge.column(graft.plans.IvfProbesHierExpr(
         ColumnBridge.expression(col("__av")), model,
-        nProbe, math.min(groupProbe, probeSupers.length)))).as("__cid"))
+        nProbe, math.min(groupProbe, model.supers.length)))).as("__cid"))
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023: near-dup

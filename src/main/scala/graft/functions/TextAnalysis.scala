@@ -151,76 +151,23 @@ object TextAnalysis {
 
   /** Contamination-check kernel: struct(hits, nsh) — how many `probes`
     * appear among the doc's distinct k-shingles, and the distinct-shingle
-    * count. Native one-pass hash-set expression when GraftExtensions is
-    * installed (no shingle-array materialization, no double intersect);
-    * exact column-formulation fallback otherwise — string equality only, so
-    * both paths agree exactly (NativeExprSpec). */
-  def shingleStats(toks: Column, probes: Seq[String], k: Int = 3): Column = {
-    val native = KqlFunctions.nativeFn("graft_shingle_stats")
-    val probeArr = array(probes.map(lit): _*)
-    if (native)
-      call_function("graft_shingle_stats", toks, probeArr, lit(k))
-    else {
-      val sh = shinglesOf(toks, k)
-      struct(size(array_intersect(sh, probeArr)).cast("long").as("hits"),
-        size(sh).cast("long").as("nsh"))
-    }
-  }
+    * count. One-pass hash-set expression (no shingle-array
+    * materialization, no double intersect); string equality only. */
+  def shingleStats(toks: Column, probes: Seq[String], k: Int = 3): Column =
+    call_function("graft_shingle_stats", toks, array(probes.map(lit): _*), lit(k))
 
   // --- repetition metrics (Gopher-style quality filters over token streams) ---
-
-  /** Multiplicity of the most frequent element of a SORTED array: one
-    * aggregate pass with (prev, run, best) state — the mode's count with no
-    * shuffle and no explode, so a billion-document table computes it
-    * scan-side. */
-  private def maxRunCount(sorted: Column): Column =
-    aggregate(sorted,
-      struct(lit(null).cast("string").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (st, x) => {
-        val run = when(x === st.getField("prev"), st.getField("run") + 1L)
-          .otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(st.getField("best"), run).as("best"))
-      },
-      st => st.getField("best"))
-
-  /** Adjacent token bigrams, NON-distinct (repetition metrics need
-    * multiplicity; the distinct shinglesOf is the dedup/MinHash unit). */
-  def bigramsOf(toks: Column): Column =
-    when(size(toks) >= 2,
-      transform(sequence(lit(1), size(toks) - 1),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-      .otherwise(array().cast("array<string>"))
 
   /** Gopher-style repetition filter signals per document:
     * dup_token_fraction (1 − distinct/total), top_token_fraction (mode
     * multiplicity / total), top_bigram_fraction, dup_bigram_fraction.
     * Training-data pipelines drop documents above thresholds on these. All
     * ratios are exact-integer divisions evaluated once per row — same IEEE
-    * result in the DuckDB oracle. Pass a MATERIALIZED token array attribute
-    * (see shinglesOf's perf contract). */
-  def repetitionMetrics(toks: Column): Column = {
-    // native one-pass counting kernel when available (RepetitionStats —
-    // identical integer-derived divisions, exact agreement asserted in
-    // NativeExprSpec); column formulation otherwise
-    val native = KqlFunctions.nativeFn("graft_repetition_stats")
-    if (native) return call_function("graft_repetition_stats", toks)
-    val n = size(toks)
-    val nd = size(array_distinct(toks))
-    val bg = bigramsOf(toks)
-    val nb = size(bg)
-    val nbd = size(array_distinct(bg))
-    struct(
-      n.cast("long").as("n_tokens"),
-      ((n - nd).cast("double") / greatest(n, lit(1)).cast("double"))
-        .as("dup_token_fraction"),
-      (maxRunCount(array_sort(toks)).cast("double") /
-        greatest(n, lit(1)).cast("double")).as("top_token_fraction"),
-      (maxRunCount(array_sort(bg)).cast("double") /
-        greatest(nb, lit(1)).cast("double")).as("top_bigram_fraction"),
-      ((nb - nbd).cast("double") / greatest(nb, lit(1)).cast("double"))
-        .as("dup_bigram_fraction"))
-  }
+    * result in the DuckDB oracle. One-pass counting kernel (RepetitionStats).
+    * Pass a MATERIALIZED token array attribute (see shinglesOf's perf
+    * contract). */
+  def repetitionMetrics(toks: Column): Column =
+    call_function("graft_repetition_stats", toks)
 
   /** Character n-grams (distinct) for n-gram Jaccard similarity. */
   def charNgrams(text: Column, n: Int = 3): Column = {

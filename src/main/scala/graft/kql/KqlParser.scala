@@ -5022,45 +5022,14 @@ object KqlParser {
       GeoLookupOpts(radius, unmatched, returnKey)
     }
 
+    /** Native codegen'd argmin loop (GeoKernelExpressions). Lines with <2
+      * vertices OR no non-null vertex pair → null (the kernel returns null
+      * when no segment was examined, so it cannot echo the query point). */
     private def geoClosestPointOnLine(lngC: Column, latC: Column,
-        line: Column): Column = {
-      // native codegen'd argmin loop when available (GeoKernelExpressions;
-      // bit-identical chain), HOF struct fold otherwise. Lines with <2
-      // vertices OR no non-null vertex pair → null on BOTH paths (the
-      // native kernel returns null when no segment was examined; the HOF
-      // guards on the fold's distance staying +Inf so it cannot echo the
-      // query point).
-      val native = graft.functions.KqlFunctions
-        .nativeFn(graft.plans.GeoKernelExpressions.closestName)
-      if (native)
-        return when(size(line) >= 2,
-          call_function(graft.plans.GeoKernelExpressions.closestName,
-            lngC.cast("double"), latC.cast("double"), line))
-      val px = lngC.cast("double"); val py = latC.cast("double")
-      val cosl = cos(radians(py))
-      val best = aggregate(sequence(lit(0), size(line) - 2),
-        struct(lit(Double.PositiveInfinity).as("d"), lit(0.0).as("x"),
-          lit(0.0).as("y")),
-        (acc, i) => {
-          val a = element_at(line, i + 1); val b = element_at(line, i + 2)
-          val x1 = (element_at(a, 1).cast("double") - px) * cosl
-          val y1 = element_at(a, 2).cast("double") - py
-          val x2 = (element_at(b, 1).cast("double") - px) * cosl
-          val y2 = element_at(b, 2).cast("double") - py
-          val dx = x2 - x1; val dy = y2 - y1
-          val len2 = dx * dx + dy * dy
-          val t = when(len2 > 0,
-            greatest(lit(0.0), least(lit(1.0), -(x1 * dx + y1 * dy) / len2)))
-            .otherwise(lit(0.0))
-          val cx = x1 + t * dx; val cy = y1 + t * dy
-          val cd = sqrt(cx * cx + cy * cy)
-          when(cd < acc.getField("d"),
-            struct(cd.as("d"), cx.as("x"), cy.as("y"))).otherwise(acc)
-        })
-      when(size(line) >= 2 &&
-          best.getField("d") < lit(Double.PositiveInfinity),
-        array(px + best.getField("x") / cosl, py + best.getField("y")))
-    }
+        line: Column): Column =
+      when(size(line) >= 2,
+        call_function(graft.plans.GeoKernelExpressions.closestName,
+          lngC.cast("double"), latC.cast("double"), line))
 
     /** `geo_distance_point_to_polygon(lng, lat, ring)` — 0 when the point is
       * inside (ray cast), else the distance to the CLOSED boundary (the
@@ -5135,16 +5104,9 @@ object KqlParser {
       * center, any precision (per-character arithmetic keeps every integer
       * far below 2^53). The scale factors are built by exact doubling, not
       * libm pow, so both engines agree bit-for-bit. */
-    private def geoHashDecode(gh: Column): Column = {
-      // native deinterleave loop when registered (GeohashCenterExpr —
-      // identical final IEEE chain; the column fallback's per-bit aggregate
-      // folds are interpreted HOFs re-evaluating the char-index chain per
-      // iteration), KqlFunctions fallback otherwise; kernel-vs-fallback
-      // parity asserted in NativeExprSpec
-      if (graft.functions.KqlFunctions.nativeFn("graft_geohash_center"))
-        call_function("graft_geohash_center", gh.cast("string"))
-      else graft.functions.KqlFunctions.geohashCenterHof(gh)
-    }
+    private def geoHashDecode(gh: Column): Column =
+      // native deinterleave loop (GeohashCenterExpr)
+      call_function("graft_geohash_center", gh.cast("string"))
 
     /** `geo_point_in_polygon(lng, lat, ring)` — ray cast over the closed
       * ring (array of [lng, lat] vertices, last edge wraps to the first):

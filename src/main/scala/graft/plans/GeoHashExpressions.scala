@@ -125,11 +125,11 @@ object GeoHashExpressions {
   }
 
   /** geo_geohash_to_central_point: cell center as struct(lng, lat). The
-    * column formulation (KqlParser.geoHashDecode) folds per-bit aggregate
+    * column formulation (KqlFunctions.geohashCenterHof) folds per-bit aggregate
     * HOFs — interpreted, re-evaluating the char-index chain every
     * iteration; this is the same deinterleave loop as cellPolygon with the
     * IDENTICAL final IEEE chain ((idx + 0.5) / 2^bits * span − offset), so
-    * native and fallback agree bit-for-bit. Unknown chars → null (the HOF
+    * native and reference agree bit-for-bit. Unknown chars → null (the HOF
     * yields a struct with null fields — same observable through the `.lng`/
     * `.lat` accessors every caller uses). */
   def centralPoint(tokU: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {

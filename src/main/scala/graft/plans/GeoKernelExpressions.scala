@@ -20,10 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * see the ops marked in the kernels) as a tight primitive loop inside
   * WholeStageCodegen.
   *
-  * The HOF formulations remain the fallback when the session lacks
-  * GraftExtensions (KqlFunctions checks registration, the Similarity.dot
-  * pattern) — results are bit-identical either way, asserted in
-  * NativeExprSpec.
+  * GraftExtensions registers them in every session (`graft.SparkEntry.builder`)
+  * and KqlFunctions/KqlParser call them directly; the HOF formulations
+  * (`KqlFunctions.pointInPolygonHof`/`pointToLineMetersHof`) stay only as the
+  * NativeExprSpec references the kernels are asserted bit-identical to.
   */
 object GeoKernelExpressions {
   val pipName = "graft_point_in_polygon"
@@ -40,7 +40,7 @@ object GeoKernelExpressions {
     while (i < n) {
       val a = ring.getArray(i)
       val b = ring.getArray(if (i + 1 == n) 0 else i + 1)
-      // null vertices: the HOF fallback's comparisons null-propagate to
+      // null vertices: the HOF reference's comparisons null-propagate to
       // "no crossing" for edges touching them — skip, don't crash
       if (a != null && b != null) {
         val xi = a.getDouble(0); val yi = a.getDouble(1)
@@ -65,7 +65,7 @@ object GeoKernelExpressions {
     var i = 0
     while (i < n - 1) {
       val a = line.getArray(i); val b = line.getArray(i + 1)
-      // null vertices: least() in the HOF fallback skips null candidates
+      // null vertices: least() in the HOF reference skips null candidates
       if (a != null && b != null) {
         val x1 = (a.getDouble(0) - px) * cosl
         val y1 = a.getDouble(1) - py
@@ -203,7 +203,7 @@ object ShingleStats {
       }
       set.add(sb.toString)
     }
-    // DISTINCT probes (array_intersect in the fallback deduplicates) —
+    // DISTINCT probes (array_intersect in the column reference deduplicates) —
     // a repeated probe phrase must count once
     var hits = 0L
     val seen = new java.util.HashSet[String]()
@@ -248,8 +248,8 @@ case class ShingleStatsExpr(first: Expression, second: Expression,
   * ONE counting pass (token/bigram multiplicity maps) instead of two
   * array_sorts + two array_distincts + an interpreted run-length fold per
   * row. The ratios are the IDENTICAL integer-derived IEEE divisions the
-  * column formulation produces (TextAnalysis.repetitionMetrics), so native
-  * and fallback agree exactly. Null tokens (absent from split() output but
+  * column formulation (the NativeExprSpec reference) produces, so native
+  * and reference agree exactly. Null tokens (absent from split() output but
   * handled for parity): excluded from distinct/mode grouping like the
   * null-propagating HOF comparisons — each null counts as a run of 1. */
 object RepetitionStats {
@@ -425,7 +425,7 @@ object ParseIpv6 {
 object ParseIpv4K {
   /** Non-negative integer token with the string-cast's accepted shape
     * (surrounding whitespace, optional leading '+', leading zeros of any
-    * length — the column fallback casts through string→int, so the kernel
+    * length — the column reference casts through string→int, so the kernel
     * must accept exactly the same tokens); saturates above `max` (any
     * saturated value is invalid downstream anyway). −1 = malformed. */
   private def tok(s: String, max: Long): Long = {
@@ -440,7 +440,7 @@ object ParseIpv4K {
       if (x <= max) x = x * 10 + (c - '0')
       i += 1
     }
-    // the cast fallback range-checks AFTER parsing, so "-0" is a valid 0
+    // the column reference range-checks AFTER parsing, so "-0" is a valid 0
     // while any other negative fails between(0, max)
     if (x > max || (neg && x != 0)) -1L else x
   }
@@ -453,7 +453,7 @@ object ParseIpv4K {
     if (slash >= 0) {
       val rest = t.substring(slash + 1)
       val next = rest.indexOf('/')
-      // anything after a second '/' is ignored (split semantics, fallback
+      // anything after a second '/' is ignored (split semantics, reference
       // parity); the bits token follows the same cast-shape rules as octets
       bits = tok(if (next >= 0) rest.substring(0, next) else rest, 32L)
       if (bits < 0) return -1L

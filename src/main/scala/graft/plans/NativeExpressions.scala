@@ -12,12 +12,13 @@ import org.apache.spark.sql.types._
   *
   * Spark's higher-order functions (`aggregate`/`zip_with`/`transform`) are
   * CodegenFallback — every element step is an interpreted lambda with boxing. These
-  * expressions generate (and interpret, for the fallback path) tight primitive
-  * loops instead, and participate in WholeStageCodegen. They are injected through
-  * the public `SparkSessionExtensions` API (`spark.sql.extensions=
-  * graft.plans.GraftExtensions`); callers fall back to the HOF formulations when
-  * the extension is not installed, so results are identical either way (asserted
-  * in NativeExprSpec).
+  * expressions generate (and interpret, outside whole-stage codegen) tight
+  * primitive loops instead, and participate in WholeStageCodegen. They are
+  * injected through the public `SparkSessionExtensions` API by [[GraftExtensions]],
+  * which every session gets from the one factory, `graft.SparkEntry.builder`: the
+  * function layer calls them directly, so a session without the extension fails
+  * at analysis (UNRESOLVED_ROUTINE). NativeExprSpec asserts each kernel
+  * bit-identical to the HOF formulation it replaced.
   */
 object NativeExpressions {
   val dotName = "graft_dot_f32"
@@ -25,8 +26,7 @@ object NativeExpressions {
   val hyperplanesName = "graft_hyperplanes"
 
   /** Deterministic pseudo-random hyperplane component for (plane p, dim d) in
-    * [-1,1]: 64-bit avalanche hash of (seed, p, d). Must stay in lockstep with
-    * Similarity.planeComponent (the HOF fallback uses that copy). */
+    * [-1,1]: 64-bit avalanche hash of (seed, p, d). */
   def planeComponent(p: Int, d: Int, seed: Long): Double = {
     var x = seed ^ (p.toLong << 32) ^ d.toLong
     x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
@@ -158,7 +158,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * The weight matrix is derived from (dim, nProj, seed) on the driver and shipped
   * to generated code as a reference object (one flat double[]) — no literal trees,
   * no per-row matrix construction, no interpreted lambdas. Accumulation order is
-  * d-major, identical to the HOF zip/fold fallback in Similarity.lshProjections. */
+  * d-major, identical to the HOF zip/fold reference in NativeExprSpec. */
 case class HyperplaneProjections(child: Expression, dim: Int, nProj: Int, seed: Long)
   extends UnaryExpression {
 
@@ -230,8 +230,9 @@ case class HyperplaneProjections(child: Expression, dim: Int, nProj: Int, seed: 
   override def prettyName: String = NativeExpressions.hyperplanesName
 }
 
-/** Session-extension installer: `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (or `.withExtensions(new GraftExtensions)`). */
+/** Session-extension installer of every graft native expression; part of the
+  * session shape `graft.SparkEntry.builder` sets (or `.withExtensions(new
+  * GraftExtensions)`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
@@ -455,12 +456,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * literal-expression form embeds k separate dot subtrees in the plan; a
   * few thousand centroids make the PLAN the bottleneck, while this is one
   * fused loop over a single literal and is k-independent in plan size).
-  * Scores replicate the fallback's chain exactly: dot accumulated in
+  * Scores replicate Similarity.ivfProbesHof's chain exactly: dot accumulated in
   * double left-to-right over min(len) skipping null vector elements (the
   * DotF32 contract), bias = Σx²/2 summed left-to-right, ties broken toward
   * the lower centroid id (the (score desc, −cid desc) struct order). */
 object IvfProbes {
-  /** Per-centroid biases (Σx²/2, left-to-right — the fallback's chain).
+  /** Per-centroid biases (Σx²/2, left-to-right — the ivfProbesHof chain).
     * A null centroid row biases to NaN so it can never win a probe slot
     * against any real centroid under the Double.compare order below. */
   def biasesOf(cents: org.apache.spark.sql.catalyst.util.ArrayData): Array[Double] = {
@@ -519,7 +520,7 @@ object IvfProbes {
       var i = 0
       while (i < k) {
         // Double.compare: NaN scores (a NaN vector element) order LARGEST,
-        // matching the fallback's sort_array; strict > keeps the earliest
+        // matching ivfProbesHof's sort_array; strict > keeps the earliest
         // (lowest) id on exact ties
         if (!taken(i) &&
             (best < 0 || java.lang.Double.compare(scores(i), bs) > 0)) {

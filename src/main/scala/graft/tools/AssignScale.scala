@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import graft.functions.Similarity
 
 /** Dev harness: measure the THREE IVF assignment paths — the literal-plan
@@ -32,12 +32,7 @@ object AssignScale {
       s"AssignScale: unknown path(s) ${(paths -- known).mkString(",")}; " +
         s"valid: ${known.mkString(",")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.Warmup.run(spark)
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")

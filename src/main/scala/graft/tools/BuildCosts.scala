@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.functions.{Dedup, HostRank, Similarity}
 
 /** Dev harness: COLD build cost of every memoized session artifact — the
@@ -16,12 +16,7 @@ object BuildCosts {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.Warmup.run(spark)
     def time[A](label: String)(f: => A): A = {

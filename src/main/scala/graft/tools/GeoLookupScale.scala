@@ -39,12 +39,7 @@ object GeoLookupScale {
     val sfDir = args(0)
     val nPolys = if (args.length > 1) args(1).toInt else 10000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.Warmup.run(spark)
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: run one contract query and attribute its wall time to Spark
   * JOBS and STAGES (the empirical loop of guide §1.1 without the UI, which
@@ -14,16 +13,10 @@ object JobProbe {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
     // hypothesis testing: SPARK_GRAFT_EXTRA_CONF="k=v,k2=v2" overlays confs
-    graft.Bench.extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
-      .foreach { case (k, v) => b = b.config(k, v) }
-    val spark = b.getOrCreate()
+    val spark = graft.Bench.extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
+      .foldLeft(graft.SparkEntry.builder(cpus)) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Warmup.run(spark)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time an arbitrary KQL text (from a file; `---` separates
   * multiple statements) against the fixture tables with the bench's session
   * shape — the fastest way to attribute a slow KQL query's cost to one
@@ -13,13 +11,7 @@ object KqlProbe {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    val spark = graft.SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Warmup.run(spark)
     val texts = scala.io.Source.fromFile(file).mkString.split("(?m)^---$")

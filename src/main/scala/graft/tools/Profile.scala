@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time named contract queries (comma-separated) against an SF dir.
   * Uses the noop sink (same methodology as Bench); pass -explain to dump plans
   * to stdout, or -plandir=<dir> [-suffix=<tag>] to write each query's
@@ -18,13 +16,7 @@ object Profile {
     val suffix = args.collectFirst { case a if a.startsWith("-suffix=") => a.drop(8) }.getOrElse("before")
     val runs = args.collectFirst { case a if a.startsWith("-n") && a.drop(2).forall(_.isDigit) && a.length > 2 => a.drop(2).toInt }.getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000") // see Bench.scala
-      .getOrCreate()
+    val spark = graft.SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.Warmup.run(spark)
     names.foreach { name =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.functions.Similarity
 
 /** Dev harness: recall@k of the approximate ANN tier against the
@@ -26,12 +26,7 @@ object RecallScale {
     val k = if (args.length > 1) args(1).toInt else 10
     val nQ = if (args.length > 2) args(2).toInt else 50
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.Warmup.run(spark)
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")

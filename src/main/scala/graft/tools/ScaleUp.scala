@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import graft.sources.Tables
 
 /** Dev harness: synthesize an N× scale-up of a fixture directory to measure
@@ -27,11 +27,7 @@ object ScaleUp {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.tableNames.foreach { t =>
       val df = Tables.load(spark, src, t)

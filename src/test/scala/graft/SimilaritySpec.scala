@@ -2085,6 +2085,56 @@ class SimilaritySpec extends SparkSpec {
     assert(out.map(_._1).toSet == Set(1L))
   }
 
+  test("bound-pruned assignment agrees with the table path on a NaN centroid") {
+    val emb = Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val real = Similarity.ivfTrain(emb, "vec_id", "embedding", 64,
+      nCentroids = 16, iters = 2)
+    // far, pairwise-distinct decoys pad the model to k; the real centroids
+    // sit at cids 2000-2015
+    def model(k: Int) = {
+      val d = Array.tabulate(k - real.length, 64)((i, j) => 500f + i * 0.25f + (j % 5))
+      (d.take(2000) ++ real ++ d.drop(2000)).map(_.clone())
+    }
+    // a NaN component makes every score of that centroid NaN, which the
+    // table path ranks first (Double.compare order), so the pruned kernel
+    // must never prune its group away. At k = 2048 the NaN row poisons its
+    // super-centroid and every row takes the exact scan; at k = 4160 the
+    // super groups train on a strided 4096-row sample that skips cid 64,
+    // so the NaN row is filed under a finite, far decoy super.
+    for ((k, bad) <- Seq((2048, 64), (2048, 2003), (4160, 64))) {
+      val cents = model(k)
+      cents(bad)(7) = Float.NaN
+      assert(cents.length >= Similarity.centroidTableThreshold)
+      for (nProbe <- Seq(1, 3)) {
+        val pruned = Similarity.assignProbes(emb, "vec_id", "embedding",
+            cents, nProbe)
+          .as[(Long, Int)].collect().toSet
+        val tbl = Similarity.assignProbesTable(emb, "vec_id", "embedding",
+            Similarity.centroidTable(emb, cents), nProbe)
+          .as[(Long, Int)].collect().toSet
+        val same = pruned == tbl // a bare set compare would print both sets
+        assert(same, s"k=$k, NaN at cid $bad, nProbe=$nProbe: " +
+          s"only-pruned=${(pruned -- tbl).take(5)}, only-table=${(tbl -- pruned).take(5)}")
+      }
+    }
+  }
+
+  test("equal centroid matrices build plans with the same result") {
+    val emb = Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val cents = Array.tabulate(2048, 64)((i, j) => ((i * 64 + j) % 97) * 0.01f)
+    def copy = cents.map(_.clone())
+    val a = Similarity.assignProbes(emb, "vec_id", "embedding", copy, 2)
+    val b = Similarity.assignProbes(emb, "vec_id", "embedding", copy, 2)
+    assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed),
+      "pruned assignment over equal matrices must canonicalize equal")
+    val h1 = Similarity.assignProbesHier(emb, "vec_id", "embedding", copy, 2)
+    val h2 = Similarity.assignProbesHier(emb, "vec_id", "embedding", copy, 2)
+    assert(h1.queryExecution.analyzed.sameResult(h2.queryExecution.analyzed),
+      "hierarchical assignment over equal matrices must canonicalize equal")
+  }
+
   test("broadcast-table assignment matches the literal kernel exactly") {
     val emb = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))

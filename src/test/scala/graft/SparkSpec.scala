@@ -6,13 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM, forked by sbt). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = SparkEntry.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       // bucketed-table tests: keep the metastore/warehouse out of the repo cwd
       .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
       .config("javax.jdo.option.ConnectionURL",
